@@ -55,17 +55,16 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Session defaults shared by tests/tools (Verify/Bench build their own
-    * per the driver contract). Shuffle partitions = `cores` (default 4 for
-    * tests; pass 32 to match local[32]); AQE coalesces/re-plans at runtime —
-    * the knob that scales this config to a real cluster is ONLY the
-    * partition count.
+  /** Session defaults for the test suites (Verify/Bench build their own
+    * per the driver contract): local[4] with 4 shuffle partitions; AQE
+    * coalesces/re-plans at runtime — the knob that scales this config to a
+    * real cluster is ONLY the partition count.
     */
-  def localSession(appName: String, cores: Int = 4): SparkSession = {
+  def localSession(): SparkSession = {
     val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -974,8 +974,8 @@ object Similarity {
     * codebooks, first-minimum argmins, fixed-order LUT sum) — the spec's
     * driver-side replica matches it EXACTLY, not approximately. */
   def pqTopK(spark: SparkSession, dir: String,
-             rerank: Int = 10 * K, subspaces: Int = PqSub): DataFrame =
-    pqTopKOf(Tables.embeddings(spark, dir), rerank, subspaces)
+             rerank: Int = 10 * K): DataFrame =
+    pqTopKOf(Tables.embeddings(spark, dir), rerank)
 
   /** The ONE two-stage skew-proof ADC top-width + bounded-exact-rerank
     * block every compressed-ANN family runs (PQ flat, IVFADC search,
@@ -1026,13 +1026,12 @@ object Similarity {
   /** [[pqTopK]] over any (vec_id, embedding) frame — the `*Of` seam
     * [[opqTopKOf]] composes with a rotated corpus and the specs plant
     * against. */
-  def pqTopKOf(base: DataFrame,
-               rerank: Int = 10 * K, subspaces: Int = PqSub): DataFrame = {
+  def pqTopKOf(base: DataFrame, rerank: Int = 10 * K): DataFrame = {
     val dim = dimOf(base)
     val e = withNorm(base, dim).localCheckpoint(true)
     val samp = ivfTrainingSample(e, pqSampleK(1 << PqBits))
       .localCheckpoint(eager = true)
-    val books = pqCodebooks(samp, dim, sub = subspaces)
+    val books = pqCodebooks(samp, dim)
     val sub = books.length
     val subDim = dim / sub
     val coded = pqEncode(e, books, dim)
@@ -1114,8 +1113,7 @@ object Similarity {
     * dedup shuffle [[ivfTopK]] pays would be the costlier stage here. */
   def ivfPqTopK(spark: SparkSession, dir: String,
                 rerank: Int = 10 * K,
-                probesOverride: Option[Int] = None,
-                subspaces: Int = PqSub): DataFrame = {
+                probesOverride: Option[Int] = None): DataFrame = {
     // fail fast on the cheap argument checks BEFORE the build trains
     // quantizer + codebooks and encodes the corpus (the search half
     // re-validates, including the ≤ numLists bound only the built
@@ -1123,8 +1121,7 @@ object Similarity {
     require(rerank >= 1, s"IVFADC without rerank is not served (got $rerank)")
     probesOverride.foreach(p =>
       require(p >= 1, s"probes must be >= 1 (got $p)"))
-    ivfPqSearch(spark, dir, ivfPqBuild(spark, dir, subspaces),
-      rerank, probesOverride)
+    ivfPqSearch(spark, dir, ivfPqBuild(spark, dir), rerank, probesOverride)
   }
 
   /** A built IVFADC index — everything a search needs EXCEPT the raw
@@ -2113,18 +2110,11 @@ object Similarity {
     * (rotation cannot help data with nothing to rebalance — the honest
     * control) and a large ADC-recall lift on the planted anisotropic
     * corpus, the production case it exists for. */
-  def opqTopKOf(base: DataFrame, rerank: Int = 10 * K,
-                subspaces: Int = PqSub): DataFrame = {
+  def opqTopKOf(base: DataFrame, rerank: Int = 10 * K): DataFrame = {
     val dim = dimOf(base)
     val samp = ivfTrainingSample(base, pqSampleK(1 << PqBits))
-    pqTopKOf(opqRotate(base, opqRotation(samp, dim, subspaces)),
-      rerank, subspaces)
+    pqTopKOf(opqRotate(base, opqRotation(samp, dim)), rerank)
   }
-
-  /** Corpus entry point for [[opqTopKOf]]. */
-  def opqTopK(spark: SparkSession, dir: String, rerank: Int = 10 * K,
-              subspaces: Int = PqSub): DataFrame =
-    opqTopKOf(Tables.embeddings(spark, dir), rerank, subspaces)
 
   // -- SQ8: scalar quantization (the second compression family) -----------
 
@@ -2228,11 +2218,6 @@ object Similarity {
         e.select(col("vec_id"), col("embedding"), col("norm")), "vec_id")))
   }
 
-  /** Corpus entry point for [[sq8TopKOf]]. */
-  def sq8TopK(spark: SparkSession, dir: String,
-              rerank: Int = 10 * K): DataFrame =
-    sq8TopKOf(Tables.embeddings(spark, dir), rerank)
-
   /** IVF × SQ8 (the FAISS IVFScalarQuantizer composition — the fourth
     * cell of the pruning×compression matrix beside IVF, PQ and IVFADC):
     * the coarse quantizer PRUNES (a query scores only its probed
@@ -2258,7 +2243,7 @@ object Similarity {
     probesOverride.foreach(p =>
       require(p >= 1, s"probes must be >= 1 (got $p)"))
     ivfSq8SearchCore(Tables.embeddings(spark, dir), ivfSq8Build(spark, dir),
-      rerank, probesOverride, None, None)
+      rerank, probesOverride, None)
   }
 
   /** A built IVF-SQ8 index — the second compression family's serving
@@ -2353,7 +2338,6 @@ object Similarity {
   private def ivfSq8SearchCore(baseRaw: DataFrame, index: Sq8Index,
                                rerank: Int,
                                probesOverride: Option[Int],
-                               allowed: Option[DataFrame],
                                queryVecs: Option[DataFrame]): DataFrame = {
     require(rerank >= 1, s"IVF-SQ8 without rerank is not served ($rerank)")
     val numLists = index.numLists
@@ -2380,11 +2364,7 @@ object Similarity {
     val probedCk = probed.localCheckpoint(eager = true)
     val probedIds = probedCk.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    // predicate pre-filter (see ivfPqSearchWhere): semi-join BEFORE
-    // ranking; planner-chosen strategy
-    val codedAll = allowed.fold(index.coded)(a =>
-      index.coded.join(a.select("vec_id"), Seq("vec_id"), "left_semi"))
-    val scored = codedAll
+    val scored = index.coded
       .filter(col("list_id").isin(probedIds: _*))
       .withColumn("xhat",
         zip_with(
@@ -2406,15 +2386,12 @@ object Similarity {
   /** [[ivfSq8TopK]] for an EXTERNAL query batch over any corpus frame —
     * the `*Of` serving/audit seam ([[ivfPqSearchForOf]]’s SQ8
     * counterpart): [[sq8IndexRecallAudit]] hands in “build corpus ∪
-    * appended batches” here. `allowed` composes the metadata
-    * pre-filter with the external batch. */
+    * appended batches” here. */
   def ivfSq8SearchForOf(base: DataFrame, index: Sq8Index,
                         queryVecs: DataFrame,
                         rerank: Int = 10 * K,
-                        probesOverride: Option[Int] = None,
-                        allowed: Option[DataFrame] = None): DataFrame =
-    ivfSq8SearchCore(base, index, rerank, probesOverride, allowed,
-      Some(queryVecs))
+                        probesOverride: Option[Int] = None): DataFrame =
+    ivfSq8SearchCore(base, index, rerank, probesOverride, Some(queryVecs))
 
   // -- persisted IVF-SQ8 index (the second family’s serving split) -------
 
@@ -2513,7 +2490,7 @@ object Similarity {
                    rerank: Int = 10 * K,
                    probesOverride: Option[Int] = None): DataFrame =
     ivfSq8SearchCore(Tables.embeddings(spark, dir), index, rerank,
-      probesOverride, None, None)
+      probesOverride, None)
 
   /** Search a persisted SQ8 index: [[sq8IndexLoad]] + the shared
     * search core — no training, no corpus encode; spec-asserted
@@ -2524,29 +2501,6 @@ object Similarity {
                      probesOverride: Option[Int] = None): DataFrame =
     ivfSq8Search(spark, dir, sq8IndexLoad(spark, indexPath),
       rerank, probesOverride)
-
-  /** Filtered search over a persisted SQ8 index — the
-    * [[pqIndexSearchWhere]] shape: PRE-filter semantics, the probe
-    * PartitionFilter composing with the predicate semi-join. */
-  def sq8IndexSearchWhere(spark: SparkSession, dir: String,
-                          indexPath: String, allowed: DataFrame,
-                          rerank: Int = 10 * K,
-                          probesOverride: Option[Int] = None): DataFrame =
-    ivfSq8SearchCore(Tables.embeddings(spark, dir),
-      sq8IndexLoad(spark, indexPath), rerank, probesOverride,
-      Some(allowed), None)
-
-  /** [[pqIndexSearchFor]] for the SQ8 family — stored artifacts,
-    * externally supplied query batch, optional metadata pre-filter:
-    * the full serving loop without retraining. */
-  def sq8IndexSearchFor(spark: SparkSession, dir: String,
-                        indexPath: String, queryVecs: DataFrame,
-                        rerank: Int = 10 * K,
-                        probesOverride: Option[Int] = None,
-                        allowed: Option[DataFrame] = None): DataFrame =
-    ivfSq8SearchCore(Tables.embeddings(spark, dir),
-      sq8IndexLoad(spark, indexPath), rerank, probesOverride,
-      allowed, Some(queryVecs))
 
   /** Append a batch of NEW vectors to a persisted SQ8 index WITHOUT
     * retraining — [[pqIndexAppend]]’s contract verbatim at this codes

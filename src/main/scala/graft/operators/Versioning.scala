@@ -14,10 +14,11 @@ import graft.Tables
   * deletes (takedowns, opt-outs, decontamination hits) is merged into the
   * previous snapshot. The scale shape is ONE id-equi full-outer join
   * between snapshot and change-set plus a bounded profile aggregate; with
-  * both sides bucketed by doc_id (the layout [[graft.sources.Bucketing]]
-  * writes), the join is shuffle-free and the cost is one pass over the
-  * changed partitions. Only the narrow change columns travel — the merge
-  * never shuffles unchanged document text.
+  * both sides bucketed by doc_id (the layout
+  * [[graft.sources.CsvIO.checkpointBucketed]] writes), the join is
+  * shuffle-free and the cost is one pass over the changed partitions.
+  * Only the narrow change columns travel — the merge never shuffles
+  * unchanged document text.
   *
   * (Reference analogue: none — the reference rebuilds `./ffdfClean` from
   * scratch each run, 02_DataCleaning.R:269; incremental maintenance is

@@ -35,18 +35,24 @@ object CsvIO {
     p
   }
 
+  /** Paths removed on JVM exit by ONE shutdown hook, however many
+    * callers register paths (a hook per path would grow with every
+    * per-call bucketed-join table). */
   private val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def cleanupOnExit(path: String): Unit =
-    if (registered.add(path)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(path))
-      }))
-    }
+  private lazy val cleanupHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      import scala.jdk.CollectionConverters._
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(); ()
+      }
+      registered.asScala.foreach(p => rm(new java.io.File(p)))
+    }))
+  private def cleanupOnExit(path: String): Unit = {
+    cleanupHook
+    registered.add(path); ()
+  }
 
   /** S1/S2: schema-declared CSV scan. Chunking is inherent — Spark splits
     * the file into partition-sized ranges; no row-cap needed. */
@@ -111,18 +117,21 @@ object CsvIO {
       .bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
 
+  private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** Oracle-checked bucketed-join lifecycle: orders + customer → bucketed
     * checkpoints on the join key → co-located sort-merge join (the MERGE
     * hint pins SMJ — a broadcast would be fine for 15k customers but would
     * skip the co-location being demonstrated; asserted shuffle-free on the
     * join keys in PlanSpec) → segment profile. The oracle runs the same
     * join+profile on the ORIGINAL tables, so the bucketed write+read must
-    * be lossless. Table names carry dataset + pid so concurrent JVMs
-    * (bench and verify) can't overwrite each other's buckets. */
+    * be lossless. Table names carry dataset + pid + a per-call sequence
+    * number, so neither concurrent JVMs (bench and verify) nor concurrent
+    * calls in one JVM can overwrite each other's buckets. */
   def bucketedJoin(spark: SparkSession, dir: String,
                    buckets: Int = 8): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9_]", "_") +
-      s"_pid${ProcessHandle.current().pid()}"
+      s"_pid${ProcessHandle.current().pid()}_${bucketSeq.incrementAndGet()}"
     val ot = s"graft_bkt_orders_$key"
     val ct = s"graft_bkt_customer_$key"
     val wh = spark.conf.get("spark.sql.warehouse.dir")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Bucketing
+import graft.sources.CsvIO
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,8 +20,8 @@ class BucketingSpec extends AnyFunSuite {
     Seq("bkt_orders", "bkt_lineitem").foreach { t =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/$t"))
     }
-    Bucketing.writeBucketed(o, "bkt_orders", "k", 8)
-    Bucketing.writeBucketed(l, "bkt_lineitem", "k", 8)
+    CsvIO.checkpointBucketed(o, "bkt_orders", "k", 8)
+    CsvIO.checkpointBucketed(l, "bkt_lineitem", "k", 8)
     // force the sort-merge path: at test scale the planner would broadcast
     // (whose BroadcastExchange is not a shuffle), hiding what we assert —
     // that bucket alignment removes the ShuffleExchanges a 100 TB
@@ -29,7 +29,7 @@ class BucketingSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "bkt_orders", "bkt_lineitem", "k")
+      val joined = spark.table("bkt_orders").join(spark.table("bkt_lineitem"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan.take(800))
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
@@ -37,5 +37,20 @@ class BucketingSpec extends AnyFunSuite {
       val expected = o.join(l, "k").count()
       assert(joined.count() === expected)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("concurrent q_bucketed_join calls on one session each return the " +
+      "serial result") {
+    // each call writes its own bucketed tables: two calls sharing names
+    // would overwrite each other's tables mid-read
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def run(): Seq[org.apache.spark.sql.Row] =
+      CsvIO.bucketedJoin(spark, sf).collect().toSeq
+    val serial = run()
+    assert(serial.nonEmpty)
+    Seq.fill(2)(Future(run())).foreach(f =>
+      assert(Await.result(f, 5.minutes) === serial))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DateType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = Tables.localSession("graft-test")
+  lazy val spark: SparkSession = Tables.localSession()
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -13,6 +13,62 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** One streaming run's figures from its progress events: data
+    * micro-batches, and the MAX across micro-batches of (sum over state
+    * operators of) numRowsTotal / memoryUsedBytes. A run with no state
+    * operator (a stateless gate like streamCurate) reads 0/0. */
+  private case class RunStats(name: String, dataBatches: Int,
+                              maxStateRows: Long, maxStateBytes: Long)
+
+  /** Run `body` and return its result with the figures of every streaming
+    * run it started, in start order, read from a listener this spec
+    * registers itself. QueryStartedEvent reaches the listener before
+    * `start()` returns; progress and termination arrive later on the
+    * listener bus, which delivers a run's QueryTerminatedEvent after all of
+    * its progress events — so waiting for each started run's termination
+    * is enough, no sleep. */
+  private def withRuns[T](body: => T): (T, Seq[RunStats]) = {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    import StreamingQueryListener._
+    val lock = new Object
+    val started = scala.collection.mutable.LinkedHashMap[
+      java.util.UUID, String]()
+    val progress = scala.collection.mutable.Map[
+      java.util.UUID, Vector[StreamingQueryProgress]]()
+    val ended = scala.collection.mutable.Set[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        lock.synchronized { started(e.runId) = e.name }
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        lock.synchronized {
+          val id = e.progress.runId
+          progress(id) = progress.getOrElse(id, Vector()) :+ e.progress
+        }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        lock.synchronized { ended += e.runId; lock.notifyAll() }
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      lock.synchronized {
+        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        while (!started.keys.forall(ended) && System.nanoTime() < deadline)
+          lock.wait(1000)
+        assert(started.keys.forall(ended),
+          s"streaming runs never reported termination: ${started.values}")
+        (out, started.toSeq.map { case (id, name) =>
+          val ps = progress.getOrElse(id, Vector())
+          def peak(f: StreamingQueryProgress => Long): Long =
+            if (ps.isEmpty) 0L else ps.map(f).max
+          RunStats(name, ps.count(_.numInputRows > 0),
+            peak(_.stateOperators.map(_.numRowsTotal).sum),
+            peak(_.stateOperators.map(_.memoryUsedBytes).sum))
+        })
+      }
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("streaming windowed agg over MemoryStream matches batch semantics") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -141,11 +197,10 @@ class StreamingSpec extends AnyFunSuite {
   test("multi-batch sessionizer: split source really batches; finals withheld") {
     // the spec that fails if someone silently reverts the split landing to
     // the one-file assumption: the run must execute >1 DATA micro-batch
-    val out = SparkEntry.queries("q_stream_sessions_multi")(spark, sf)
-      .collect()
-    assert(Streaming.lastRunDataBatches >= 2,
-      s"split source must arrive as multiple micro-batches, " +
-        s"got ${Streaming.lastRunDataBatches}")
+    val (out, runs) = withRuns(
+      SparkEntry.queries("q_stream_sessions_multi")(spark, sf).collect())
+    assert(runs.nonEmpty && runs.last.dataBatches >= 2,
+      s"split source must arrive as multiple micro-batches, got $runs")
     // emission rule: all sessions except each user's final one — the
     // disorder-covering watermark never fires a timeout, so emitted count
     // = total sessions − distinct users (content is oracle-gated)
@@ -448,7 +503,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream curate gate reproduces the batch predicate; truly stateless") {
-    val got = Streaming.streamCurate(spark, sf)
+    val (got, runs) = withRuns(Streaming.streamCurate(spark, sf))
     // the batch form of the same two-stage predicate, built from the
     // registered batch operator: q_repetition's survivors restricted to
     // the chain's en-filter — cross-checked via q_curate_chain's columns
@@ -468,7 +523,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // every batch doc passing BOTH gates is present (en-filter parity is
     // pinned by the DuckDB oracle; here we pin the repetition side)
-    assert(Streaming.lastRunDataBatches >= 1)
+    assert(runs.nonEmpty && runs.last.dataBatches >= 1, s"got $runs")
   }
 
   test("streaming dedup keeps first-seen doc per content hash") {
@@ -547,29 +602,29 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming funnel: multi-batch run equals the batch funnel exactly") {
-    val streamed = SparkEntry.queries("q_stream_funnel")(spark, sf).collect()
+    val (streamedRows, runs) = withRuns(
+      SparkEntry.queries("q_stream_funnel")(spark, sf).collect())
+    val streamed = streamedRows
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(Streaming.lastRunDataBatches >= 2,
-      "funnel must be exercised under REAL multi-batch arrival, got " +
-        s"${Streaming.lastRunDataBatches}")
+    assert(runs.nonEmpty && runs.last.dataBatches >= 2,
+      s"funnel must be exercised under REAL multi-batch arrival, got $runs")
     val batch = SparkEntry.queries("q_funnel")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(streamed.toSeq === batch.toSeq,
       "incremental greedy state diverged from the batch min()-chain")
   }
 
-  test("runStateLog measures state: keyed run bounded by key domain, " +
+  test("streaming state measured: keyed run bounded by key domain, " +
     "stateless gate reads zero") {
-    // the graft.StateBytes instrument's contract, pinned: a keyed-state
-    // run reports >0 state rows bounded by its key domain (one state
-    // entry per user for the running-totals mapGroupsWithState)…
-    Streaming.runStateLog = Nil
-    SparkEntry.queries("q_stream_totals")(spark, sf).collect()
-    val keyed = Streaming.runStateLog
-    assert(keyed.nonEmpty, "streaming run must log its state footprint")
+    // a keyed-state run reports >0 state rows bounded by its key domain
+    // (one state entry per user for the running-totals
+    // mapGroupsWithState)…
+    val (_, keyed) = withRuns(
+      SparkEntry.queries("q_stream_totals")(spark, sf).collect())
+    assert(keyed.nonEmpty, "streaming run must report its progress")
     val tot = keyed.last
     assert(tot.maxStateRows > 0 && tot.maxStateBytes > 0,
-      s"keyed state must be visible to the instrument, got $tot")
+      s"keyed state must be visible in the run's progress, got $tot")
     val users = Tables.events(spark, sf)
       .select("user_id").distinct().count()
     assert(tot.maxStateRows <= users,
@@ -577,31 +632,27 @@ class StreamingSpec extends AnyFunSuite {
         s"$users-user key domain")
     // …and the deliberately stateless ingest gate measures EXACTLY zero
     // (the "no state store" design claim, as a number)
-    Streaming.runStateLog = Nil
-    SparkEntry.queries("q_stream_curate")(spark, sf).collect()
-    val gate = Streaming.runStateLog
+    val (_, gate) = withRuns(
+      SparkEntry.queries("q_stream_curate")(spark, sf).collect())
     assert(gate.nonEmpty && gate.last.maxStateRows === 0L &&
       gate.last.maxStateBytes === 0L,
       s"stateless gate must read 0/0, got ${gate.lastOption}")
   }
 
-  test("runStateLog is append-safe under concurrent run completion") {
-    // Two streaming queries driven from separate threads (the 7-way
-    // parallel Verify mode's shape): every completed run must land its
-    // own log entry — the pre-r15 `var list = list :+ x` read-modify-
-    // write could lose one when completions interleaved.
+  test("concurrent streaming runs on one session each return their serial rows") {
+    // Two streaming queries driven from separate threads (the parallel
+    // Verify mode's shape) share one session: each must return exactly
+    // the rows it returns when run alone.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    Streaming.runStateLog = Nil
-    val fa = Future(SparkEntry.queries("q_stream_totals")(spark, sf).collect())
-    val fb = Future(SparkEntry.queries("q_stream_curate")(spark, sf).collect())
-    Await.result(fa, 5.minutes); Await.result(fb, 5.minutes)
-    val sinks = Streaming.runStateLog.map(_.sink)
-    assert(sinks.exists(_.startsWith("graft_stream_totals")),
-      s"totals run entry missing from $sinks")
-    assert(sinks.exists(_.startsWith("graft_stream_curate")),
-      s"curate run entry missing from $sinks")
-    assert(sinks.size >= 2, s"both concurrent runs must log, got $sinks")
+    def rows(q: String): Seq[String] =
+      SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+    val qs = Seq("q_stream_totals", "q_stream_curate")
+    val serial = qs.map(rows)
+    val concurrent = qs.map(q => Future(rows(q)))
+      .map(Await.result(_, 5.minutes))
+    qs.indices.foreach(i =>
+      assert(concurrent(i) === serial(i), s"${qs(i)} diverged when concurrent"))
   }
 }

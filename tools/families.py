@@ -33,7 +33,7 @@ FAMILIES = {
     "dedup / ANN / text": """
         ex sb s4 mh sh ng pj m1 m3 dd ss id bl
         li qu tk fp tf ii hh vo bp bm m2 rv ld
-        at al ai em e1 a1 es""",
+        at al ai em e1 a1 es x""",
     "curation + sources": """
         re sm dc tm sp cw do rp cc hm wm fd sv jl or ck je en e2""",
     "multimodal": "mm im au vi",
